@@ -53,18 +53,17 @@ RESULT_SCHEMA = T.StructType(
 _VALIDATOR_CACHE: dict[str, Validator] = {}
 
 
-def _cached_validator(schema_text: str, enforce_formats: bool) -> Validator:
-    key = f"{enforce_formats}:{schema_text}"
-    v = _VALIDATOR_CACHE.get(key)
+def _cached_validator(schema_text: str) -> Validator:
+    v = _VALIDATOR_CACHE.get(schema_text)
     if v is None:
         node = parse_schema(json.loads(schema_text))
-        v = Validator(node, enforce_formats=enforce_formats)
-        _VALIDATOR_CACHE[key] = v
+        v = Validator(node)
+        _VALIDATOR_CACHE[schema_text] = v
     return v
 
 
-def _validate_series(schema_text: str, s: pd.Series, enforce_formats: bool) -> pd.DataFrame:
-    v = _cached_validator(schema_text, enforce_formats)
+def _validate_series(schema_text: str, s: pd.Series) -> pd.DataFrame:
+    v = _cached_validator(schema_text)
     valids: list[Optional[bool]] = []
     viols: list[Optional[list]] = []
     for text in s:
@@ -91,7 +90,6 @@ def validate_json_column(
     json_col: str,
     schema: dict | str,
     result_col: str = "validation",
-    enforce_formats: bool = True,
 ) -> DataFrame:
     """Attach ``<result_col>.valid`` + ``<result_col>.violations`` computed
     from the JSON text in ``json_col`` against a draft-04 ``schema``."""
@@ -103,7 +101,7 @@ def validate_json_column(
     @F.pandas_udf(RESULT_SCHEMA)
     def _udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for s in it:
-            yield _validate_series(schema_text, s, enforce_formats)
+            yield _validate_series(schema_text, s)
 
     return df.withColumn(result_col, _udf(F.col(json_col)))
 
@@ -113,7 +111,6 @@ def validate_json_pairs(
     schema_col: str,
     json_col: str,
     result_col: str = "validation",
-    enforce_formats: bool = True,
 ) -> DataFrame:
     """Per-row (schema_json, instance_json) validation — one Arrow stage for
     a table that mixes many schemas (e.g. the conformance corpus re-encoded
@@ -139,7 +136,7 @@ def validate_json_pairs(
                 schemas[~null_mask], sort=False
             ):
                 parts.append(
-                    _validate_series(schema_text, sub, enforce_formats)
+                    _validate_series(schema_text, sub)
                     .set_index(sub.index)
                 )
             if parts:

@@ -107,7 +107,7 @@ def _canon(v: Any) -> str:
 
 
 # vetted format regexes (draft-04 names, reference interface.go:38-45);
-# annotation-grade in draft-04 — we enforce them, toggleable at the engine API
+# annotation-grade in draft-04 — every tier enforces them
 _RE_EMAIL = re.compile(r"^[^@\s]+@[^@\s]+\.[^@\s]+$")
 _RE_HOSTNAME = re.compile(
     r"^(?=.{1,253}$)[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?"
@@ -156,11 +156,9 @@ class Validator:
     """Compile-once wrapper (reference validator/validator.go:21-53): the
     resolver + schema pair is built once and reused across every instance."""
 
-    def __init__(self, schema: SchemaNode, resolver: Optional[RefResolver] = None,
-                 enforce_formats: bool = True):
+    def __init__(self, schema: SchemaNode, resolver: Optional[RefResolver] = None):
         self.schema = schema
         self.resolver = resolver or RefResolver.with_default_providers(schema.root())
-        self.enforce_formats = enforce_formats
 
     def validate(self, value: Any) -> list[Violation]:
         """Return all violations ([] ⇒ valid). The reference stops at the
@@ -228,7 +226,7 @@ class Validator:
                 out.append(Violation("maxLength", path, f"length {len(v)} > {s.max_length}"))
             if s.pattern is not None and not s.pattern.search(v):
                 out.append(Violation("pattern", path, f"does not match {s.pattern.pattern!r}"))
-            if s.format and self.enforce_formats and not _format_ok(s.format, v):
+            if s.format and not _format_ok(s.format, v):
                 out.append(Violation("format", path, f"not a valid {s.format}"))
 
         # array keywords

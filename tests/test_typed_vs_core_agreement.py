@@ -1,7 +1,9 @@
-"""Randomized cross-tier agreement: the typed-column Catalyst compiler must
-give the same verdict as the pure-Python semantic core on every row, for
-randomly generated schemas × randomly generated rows (fixed seed)."""
+"""Randomized cross-tier agreement: the typed-column Catalyst tier must give
+the same verdict as the pure-Python semantic core on every row, for
+randomly generated schemas × randomly generated rows (fixed seed) — and so
+must the Variant tier on the same rows serialized to JSON."""
 
+import json
 import random
 
 from pyspark.sql import types as T
@@ -9,6 +11,7 @@ from pyspark.sql import types as T
 from jsschema_spark import parse_schema
 from jsschema_spark.compiler import TableValidator
 from jsschema_spark.pyvalidate import Validator
+from jsschema_spark.variant import JsonColumnValidator
 
 SEED = 20260816
 
@@ -118,6 +121,29 @@ def test_tier_divergence_edges(spark):
     assert expect == [True, False, True]
     assert got == expect
 
+    # typed-tier defects the Variant tier never had: (a) an
+    # additionalProperties schema on a struct and (b) on a MapType column
+    # was ignored; an enum member of another JSON type than the column's
+    # (c) crashed the job with CAST_INVALID_INPUT or (d) failed analysis
+    cases = [
+        ({"properties": {"a": {}}, "additionalProperties": {"type": "string"}},
+         "a long, b long", [(1, 2), (1, None)], [False, True]),
+        ({"properties": {"m": {"additionalProperties": {"maximum": 5}}}},
+         "m map<string,long>", [({"a": 1, "z": 9},), ({"a": 1},)], [False, True]),
+        ({"properties": {"s": {"enum": [1, "x"]}}}, "s string", [("x",), ("1",)], [True, False]),
+        ({"properties": {"i": {"enum": [True, 7]}}}, "i long", [(7,), (1,)], [True, False]),
+    ]
+    for schema, ddl, rows, expect in cases:
+        node = parse_schema(schema)
+        df = spark.createDataFrame(rows, ddl)
+        core = Validator(node)
+        assert [
+            core.is_valid({k: v for k, v in zip(df.columns, row) if v is not None})
+            for row in rows
+        ] == expect
+        got = [r.valid for r in TableValidator(node, df.schema).apply(df).collect()]
+        assert got == expect, (schema, got)
+
 
 def test_random_agreement(spark):
     rng = random.Random(SEED)
@@ -128,16 +154,20 @@ def test_random_agreement(spark):
         tv = TableValidator(node, st)
         got = [r.valid for r in tv.apply(df, with_violations=False).collect()]
 
+        # typed-path semantics: NULL column ≡ absent property
+        docs = [
+            {name: val for name, val in zip(st.names, row) if val is not None}
+            for row in rows
+        ]
+        jv = JsonColumnValidator.try_compile(schema_dict)
+        assert jv is not None, schema_dict
+        jdf = spark.createDataFrame([(json.dumps(d),) for d in docs], "payload string")
+        got_variant = [r.valid for r in jv.apply(jdf, "payload").select("validation.valid").collect()]
+
         core = Validator(node)
-        for row, spark_valid in zip(rows, got):
-            # typed-path semantics: NULL column ≡ absent property
-            as_json = {
-                name: val
-                for name, val in zip([f.name for f in st.fields], row)
-                if val is not None
-            }
-            expect = core.is_valid(as_json)
-            assert spark_valid == expect, (
-                f"trial {trial}: schema={schema_dict} row={as_json} "
-                f"spark={spark_valid} core={expect}"
+        for doc, spark_valid, variant_valid in zip(docs, got, got_variant):
+            expect = core.is_valid(doc)
+            assert spark_valid == variant_valid == expect, (
+                f"trial {trial}: schema={schema_dict} row={doc} "
+                f"typed={spark_valid} variant={variant_valid} core={expect}"
             )

@@ -56,8 +56,13 @@ def test_unsupported_schemas_fall_back(spark):
     ) is None
     assert JsonColumnValidator.try_compile({"enum": [[1, 2]]}) is None
     # formerly-fallback keywords now compile via the map/array variant casts
-    # and compile-time $ref inlining
+    # and compile-time $ref inlining, and so does non-recursive nesting up
+    # to MAX_COMPILE_REF_DEPTH (16) levels
+    nested = {"type": "integer"}
+    for _ in range(12):
+        nested = {"properties": {"x": nested}}
     for s in (
+        nested,
         {"patternProperties": {"^S_": {}}},
         {"additionalProperties": False},
         {"items": [{"type": "string"}]},
